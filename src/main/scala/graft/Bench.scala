@@ -109,17 +109,15 @@ object Bench {
             (full + "\n").getBytes("UTF-8")))
         true
       } catch { case NonFatal(_) => println(full); false } // unwritable cwd: at least log it
-    // Maintained-table build ledger (r18 verdict #2): attribute the
-    // fleet's scratch-parquet build cost per table for this run. Same
-    // artifact-stability rule as BENCH_FULL above: a FILTERED run only
-    // builds the tables its few queries touch and must not clobber the
-    // full run's attribution record.
-    val ledger = {
-      import scala.jdk.CollectionConverters._
-      graft.operators.Dedup.buildLedger.asScala.toSeq.sortBy(_._1)
-        .map { case (n, (c, t)) => "\"" + n + "\":{\"builds\":" + c + ",\"secs\":" + ms(t) + "}" }
-        .mkString("{", ",", "}")
-    }
+    // State build ledger: builds, hits and build seconds per registry
+    // entry name for this run. Same artifact-stability rule as
+    // BENCH_FULL above: a FILTERED run only builds what its few
+    // queries touch and must not clobber the full run's record.
+    val ledger = State.ledger
+      .map { case (n, b, h, t) =>
+        "\"" + esc(n) + "\":{\"builds\":" + b + ",\"hits\":" + h + ",\"secs\":" + ms(t) + "}"
+      }
+      .mkString("{", ",", "}")
     val ledgerTarget =
       if (only.isDefined) "BENCH_TABLE_LEDGER_PARTIAL.json" else "BENCH_TABLE_LEDGER.json"
     try java.nio.file.Files.write(java.nio.file.Paths.get(ledgerTarget),

@@ -14,20 +14,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Memoized parquet relations: `spark.read.parquet` builds a fresh
-    * file index (driver listing) and re-infers the schema (footer
-    * read) on EVERY call, and a bench pass performs ~2,000 loads —
-    * pure fixed driver overhead repeated per query. One DataFrame per
-    * (application, dir, table, content watermark) reuses the resolved
-    * relation; the watermark key is the same staleness contract the
-    * planner-stat cache and every maintained index use, so a table
-    * mutated mid-session re-lists and re-resolves under its new
-    * version (and the superseded entry is dropped). This memoizes the
-    * LOGICAL relation only — no rows are cached; every execution still
-    * scans the parquet.
+  /** A memoized parquet relation: `spark.read.parquet` builds a fresh
+    * file index (driver listing) and re-infers the schema (footer read)
+    * on EVERY call, and a bench pass performs ~2,000 loads. One
+    * DataFrame per table version ([[State.memo]]) reuses the resolved
+    * relation — the LOGICAL relation only; every execution still scans
+    * the parquet.
     */
-  private val dfCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // every query path enters through a table load, so this is the
     // one choke point that guarantees the native vector kernels
@@ -36,16 +29,8 @@ object Tables {
     // session-local mechanism as hilbert_index (production installs
     // them via GraftExtensions instead)
     graft.functions.VectorExprs.register(spark)
-    val prefix = Seq(spark.sparkContext.applicationId, sfDir, name, "#df").mkString("|")
-    val key = prefix + "|" + snapshotVersion(spark, sfDir, name)
-    if (!dfCache.containsKey(key)) {
-      val it = dfCache.keySet.iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k.startsWith(prefix + "|") && k != key) it.remove()
-      }
-    }
-    dfCache.computeIfAbsent(key, _ => spark.read.parquet(s"$sfDir/$name.parquet"))
+    State.memo(spark, sfDir, "relation:" + name, snapshotVersion(spark, sfDir, name))(
+      spark.read.parquet(s"$sfDir/$name.parquet"))
   }
 
   /** The canonical loader for a table name — `events` (and any future
@@ -90,53 +75,29 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
-  /** Memoized planner statistic: max(idCol) of a table, used to derive
-    * size-adaptive bucket counts (l1's and ta6's two-level prefix
-    * sums). One scalar parquet aggregate per (application, dir,
-    * table) — NOT per query construction: ScaleGuardSpec alone builds
-    * every query several times, and an eager per-construction job
-    * would bill a corpus scan each time. Null-safe: an empty table
-    * yields 0 (callers clamp bucket size to >= 1).
+  /** A planner statistic, memoized per table version: one scalar
+    * parquet aggregate per version — NOT per query construction:
+    * ScaleGuardSpec alone builds every query several times, and an
+    * eager per-construction job would bill a corpus scan each time.
     */
-  private val statCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Memo-with-eviction: one live entry per (app, dir, table, stat)
-    * — a superseded snapshot's entry is dropped when the stat is first
-    * requested under a newer content watermark, so a long session over
-    * a frequently-mutating corpus holds O(stats), not O(stats ×
-    * versions), driver memory (r16 ADVICE).
-    */
-  private def memoStat(prefix: String, ver: String)(compute: => Long): Long = {
-    val key = prefix + "|" + ver
-    if (!statCache.containsKey(key)) {
-      val it = statCache.keySet.iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k.startsWith(prefix + "|") && k != key) it.remove()
-      }
-    }
-    statCache.computeIfAbsent(key, _ => java.lang.Long.valueOf(compute))
-  }
+  private def memoStat(spark: SparkSession, dir: String, table: String, stat: String)
+                      (compute: => Long): Long =
+    State.memo(spark, dir, s"stat:$table:$stat", snapshotVersion(spark, dir, table))(compute)
 
   /** Memoized planner statistic: row count of a table. The sampling
     * rate ll4b's trainer needs must come from the COUNT, not the max
     * id — id-keyed stepping silently undersamples any table whose id
     * space is sparse (sharded / offset ids), which is exactly the
-    * 100 TB layout. Same cache discipline as [[maxIdStat]].
+    * 100 TB layout.
     */
-  def countStat(spark: SparkSession, dir: String, table: String): Long = {
-    val prefix = Seq(spark.sparkContext.applicationId, dir, table, "#count").mkString("|")
-    memoStat(prefix, snapshotVersion(spark, dir, table))(
-      loader(table)(spark, dir).count())
-  }
+  def countStat(spark: SparkSession, dir: String, table: String): Long =
+    memoStat(spark, dir, table, "count")(loader(table)(spark, dir).count())
 
   /** Memoized planner statistic: sum of a row expression over a table
-    * (e.g. ts3's corpus token count). Same cache discipline as
-    * [[maxIdStat]]; null (empty table) yields 0.
+    * (e.g. ts3's corpus token count); null (empty table) yields 0.
     */
   def sumStat(spark: SparkSession, dir: String, table: String, exprSql: String): Long = {
-    val prefix = Seq(spark.sparkContext.applicationId, dir, table, "#sum", exprSql).mkString("|")
-    memoStat(prefix, snapshotVersion(spark, dir, table)) {
+    memoStat(spark, dir, table, "sum:" + exprSql) {
       val row = loader(table)(spark, dir)
         .agg(org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.expr(exprSql).cast("long"))).first()
@@ -144,9 +105,13 @@ object Tables {
     }
   }
 
+  /** Memoized planner statistic: max(idCol) of a table, used to derive
+    * size-adaptive bucket counts (l1's and ta6's two-level prefix
+    * sums). Null-safe: an empty table yields 0 (callers clamp bucket
+    * size to >= 1).
+    */
   def maxIdStat(spark: SparkSession, dir: String, table: String, idCol: String): Long = {
-    val prefix = Seq(spark.sparkContext.applicationId, dir, table, idCol).mkString("|")
-    memoStat(prefix, snapshotVersion(spark, dir, table)) {
+    memoStat(spark, dir, table, "max:" + idCol) {
       // route through the canonical loader so timestamp stats (e.g.
       // dbg1's "now") see normalized types whatever the file encoding
       val row = loader(table)(spark, dir)
@@ -162,12 +127,8 @@ object Tables {
     * enough to evaluate on every memoized-artifact lookup, and it
     * changes whenever the table gains, loses, or rewrites a file
     * (append, compaction, in-place re-crawl — exactly the mutations
-    * cd1/jd2/ll14 model). Every session-memoized artifact (the
-    * maintained index tables, the planner statistics) keys on it, so
-    * a corpus updated mid-session can never serve a stale index: the
-    * next lookup sees a new version and rebuilds (or, for the
-    * per-doc index tables, splices the delta — Dedup.refreshIncrementally).
-    * On a real deployment this is the table format's snapshot id
+    * cd1/jd2/ll14 model). It is the version of every [[State]] entry
+    * derived from the table. On a real deployment this is the table format's snapshot id
     * (Delta/Iceberg version); the file-listing fingerprint is the
     * plain-parquet equivalent.
     */

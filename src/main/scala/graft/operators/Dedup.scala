@@ -379,22 +379,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_match"),
         (col("n_match") / lit(16.0)).as("est_sim"))
 
-  /** Eagerly materialize a (small) derived pair set, then release the
-    * signature cache that produced it — without this every pipeline
-    * run pins a signature-table-sized cache for the rest of the
-    * session, and downstream iterative consumers (ll9's CC rounds)
-    * would re-enter the whole minhash lineage.
-    */
-  private def materializeAndRelease(s: SparkSession, pairs: DataFrame,
-                                    sigs: DataFrame): DataFrame = {
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-cc-checkpoints")
-    val out = pairs.checkpoint() // eager, reliable
-    sigs.unpersist()
-    out
-  }
-
   /** MinHash-LSH near-dup pairs (the ll2 pipeline): shingle -> 16
     * minhashes -> 4 band keys -> band-bucket self-join for candidates
     * -> signature-overlap verify at >= 8/16.
@@ -409,111 +393,19 @@ object Dedup {
       .distinct()
   }
 
-  /** The MAINTAINED signature index. A real pipeline does not
-    * re-shingle the corpus per query: the MinHash signature table is
-    * materialized storage, updated as documents arrive (exactly what
-    * ll14's corpus-index side models), and every near-dup consumer
-    * reads it. This mirrors that within a session: the signatures are
-    * computed once per (application, sfDir), written to scratch
-    * parquet, and every caller — ll2's pair generation, ll9's
-    * clustering, ll14's incremental probe, ll19's containment — gets
-    * a plain parquet scan. Keyed by sfDir: callers pointing the same
-    * session at different corpora stay isolated (stale-content risk
-    * only exists for a caller mutating a dir in place mid-session,
-    * which no driver or spec path does).
+  /** A MAINTAINED index table over the corpus at `dir`: one
+    * [[graft.State]] table per version of `watermarkTables`. A real
+    * pipeline does not re-derive its indexes per query; it maintains
+    * them as documents arrive (ll14's corpus-index side models that).
+    * These tables are index-sized (shingles/signatures of the corpus,
+    * not the corpus); a 100 TB deployment keeps the parquet and drops
+    * the pin.
     */
-  /** Build-once-read-everywhere: materialize `df` to scratch parquet
-    * on first touch, hand every caller the SAME parquet-backed,
-    * memory-persisted frame. The parquet copy is durable truth (the
-    * maintained-table story; survives executor loss, resets lineage);
-    * the persist keeps the multi-self-join consumers (ll6 scans its
-    * shingles ~6 times) on hot storage instead of re-reading parquet
-    * per scan. These tables are index-sized (shingles/signatures of
-    * the corpus, not the corpus); a 100 TB deployment keeps the
-    * parquet and drops the persist.
-    *
-    * STALENESS CONTRACT: the memo key includes the content watermark
-    * of every source table the artifact derives from
-    * (Tables.snapshotVersion — a metadata-only file-listing
-    * fingerprint). A corpus mutated at `dir` mid-session therefore
-    * can never serve a stale index: the next lookup sees a new
-    * version, unpersists the superseded frame, and rebuilds — or
-    * reads the spliced table a prior [[refreshIncrementally]] already
-    * registered under the new version.
-    */
-  private[graft] final case class Materialized(version: String, path: String, df: DataFrame)
-
-  // MD5 of the full key + version, not a 32-bit hashCode: two
-  // (session, sfDir) keys colliding would overwrite each other's
-  // artifact. The version in the path keeps a REBUILD from landing on
-  // the superseded snapshot's path mid-write; once the replacement is
-  // registered, dropScratch deletes the old path outright — a stale
-  // pre-mutation DataFrame then fails loudly on execution (the
-  // consumer contract below) instead of silently reading old data.
-  private def scratchPath(name: String, key: String, ver: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-$name-" + java.security.MessageDigest.getInstance("MD5")
-        .digest((key + "|" + ver).getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** Per-build wall-time ledger (name -> (builds, total seconds)):
-    * the maintained-table fleet's build+write cost is a real per-
-    * session tax that lands on whichever query first touches each
-    * table — the ledger makes it attributable instead of reading as
-    * unexplained drift on artifact-heavy queries. Bench dumps it.
-    */
-  private[graft] val buildLedger =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]()
-
-  private def writeAndRegister(s: SparkSession, name: String, key: String,
-                               ver: String, df: DataFrame): Materialized = {
-    val p = scratchPath(name, key, ver)
-    val t0 = System.nanoTime()
-    df.write.mode("overwrite").parquet(p)
-    val secs = (System.nanoTime() - t0) / 1e9
-    buildLedger.merge(name, (1L, secs),
-      (a, b) => (a._1 + b._1, a._2 + b._2))
-    Console.err.println(f"[graft-ledger] materialized $name ver_len=${ver.length} build_s=$secs%.3f")
-    Materialized(ver, p,
-      s.read.parquet(p).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** Reclaim a superseded snapshot's scratch parquet. Called only
-    * AFTER the replacement version is fully written and registered
-    * (writeAndRegister materializes before returning), so nothing in
-    * the cache can still plan against the path; a long session over a
-    * frequently-mutating corpus otherwise grows tmp without bound
-    * (r16 ADVICE). Best-effort: a failed delete costs disk, not
-    * correctness. CONSUMER CONTRACT: a DataFrame handed out BEFORE the
-    * corpus mutated must be re-fetched after it — the staleness
-    * contract already says its contents are obsolete, and executing it
-    * now fails loudly (scan of a deleted path) instead of silently
-    * serving the old snapshot.
-    */
-  private[operators] def dropScratch(s: SparkSession, path: String): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  private[operators] def materializedTable(cache: java.util.concurrent.ConcurrentHashMap[String, Materialized],
-                                s: SparkSession, dir: String, name: String,
-                                watermarkTables: Seq[String] = Seq("documents"))
-                               (build: => DataFrame): DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + dir + "|" + name
-    val ver = watermarkTables.map(Tables.snapshotVersion(s, dir, _)).mkString("|")
-    cache.compute(key, (_, old) => {
-      if (old != null && old.version == ver) old
-      else {
-        val out = writeAndRegister(s, name, key, ver, build)
-        if (old != null) { // superseded snapshot: release blocks + scratch
-          old.df.unpersist()
-          dropScratch(s, old.path)
-        }
-        out
-      }
-    }).df
-  }
+  private[operators] def materializedTable(s: SparkSession, dir: String, name: String,
+                                           watermarkTables: Seq[String] = Seq("documents"))
+                                          (build: => DataFrame): DataFrame =
+    graft.State.table(s, dir, name,
+      watermarkTables.map(Tables.snapshotVersion(s, dir, _)).mkString("|"))(build)
 
   /** INCREMENTAL refresh of the per-doc maintained index tables
     * (shingles, MinHash signatures, SimHash fingerprints) from a
@@ -548,58 +440,40 @@ object Dedup {
       .join(broadcast(delta.filter(col("status").isin("added", "changed"))
         .select(col("doc_id"))), "doc_id")
     val freshCorpus = corpusOf(freshDocs, perturb = true)
-    var splicedCount = 0
     // `fresh`/`retire` are per-table: the dedup indexes derive from
     // the TWO-CRAWL corpus (twins retire with their base), while the
     // postings index derives from the raw documents table
-    def splice(cache: java.util.concurrent.ConcurrentHashMap[String, Materialized],
-               name: String, fresh: DataFrame, retire: DataFrame,
-               build: DataFrame => DataFrame): Unit = {
-      val key = s.sparkContext.applicationId + "|" + dir + "|" + name
-      cache.computeIfPresent(key, (_, old) =>
-        if (old.version == ver) old // already current: nothing to splice
-        else {
-          val spliced = old.df.join(broadcast(retire), Seq("doc_id"), "left_anti")
-            .unionByName(build(fresh))
-          // writeAndRegister materializes the splice (which READS
-          // old.df's parquet) before the old snapshot is reclaimed
-          val out = writeAndRegister(s, name, key, ver, spliced)
-          old.df.unpersist()
-          dropScratch(s, old.path)
-          splicedCount += 1
-          out
-        })
-    }
-    splice(shCache, "shtable", freshCorpus, retireTwins, shingles)
-    splice(simCache, "simtable", freshCorpus, retireTwins, simhash)
-    splice(sigCache, "sigtable", freshCorpus, retireTwins,
-      c => minhashSignatures(shingles(c)))
-    splice(Search.postingsCache, "postings", freshDocs, retireBase,
-      Search.postingsOf)
-    splice(cdcCache, "cdctable", freshDocs, retireBase, cdcChunks)
-    // the window-hash indexes: per-doc derivations of the augmented /
-    // twin corpora, so fresh docs re-augment through the SAME
-    // transforms the full builds use (ll33AugOf / cp6CorpusOf)
-    splice(winCache, "wintable", ll33AugOf(freshDocs), retireBase,
-      windowHashes(_, 50))
-    splice(Pipeline.cp6WinCache, "cp6wintable", Pipeline.cp6CorpusOf(freshDocs),
-      retireTwins, windowHashes(_, Pipeline.cp6W))
-    splicedCount
+    def splice(name: String, fresh: DataFrame, retire: DataFrame,
+               build: DataFrame => DataFrame): Boolean =
+      graft.State.splice(s, dir, name, ver)(
+        _.join(broadcast(retire), Seq("doc_id"), "left_anti").unionByName(build(fresh)))
+    Seq(
+      splice("shtable", freshCorpus, retireTwins, shingles),
+      splice("simtable", freshCorpus, retireTwins, simhash),
+      splice("sigtable", freshCorpus, retireTwins, c => minhashSignatures(shingles(c))),
+      splice("postings", freshDocs, retireBase, Search.postingsOf),
+      splice("cdctable", freshDocs, retireBase, cdcChunks),
+      // the window-hash indexes: per-doc derivations of the augmented /
+      // twin corpora, so fresh docs re-augment through the SAME
+      // transforms the full builds use (ll33AugOf / cp6CorpusOf)
+      splice("wintable", ll33AugOf(freshDocs), retireBase, windowHashes(_, 50)),
+      splice("cp6wintable", Pipeline.cp6CorpusOf(freshDocs), retireTwins,
+        windowHashes(_, Pipeline.cp6W))
+    ).count(identity)
   }
 
-  private val sigCache = new java.util.concurrent.ConcurrentHashMap[String, Materialized]()
+  /** The MinHash signature index every near-dup consumer reads: ll2's
+    * pair generation, ll9's clustering, ll14's incremental probe,
+    * ll19's containment. */
   private[operators] def signatureTable(s: SparkSession, dir: String): DataFrame =
-    materializedTable(sigCache, s, dir, "sigtable")(minhashSignatures(shingleTable(s, dir)))
+    materializedTable(s, dir, "sigtable")(minhashSignatures(shingleTable(s, dir)))
 
-  /** The maintained (doc_id, shingle) table itself — the inverted-
-    * index side of the same storage story: ll6's Jaccard join, ll19's
-    * intersection counts and the signature build all read one
-    * session-materialized shingling instead of re-splitting the
-    * corpus text per query.
+  /** The maintained (doc_id, shingle) table: ll6's Jaccard join (~6
+    * scans), ll19's intersection counts and the signature build read
+    * it instead of re-splitting the corpus text per query.
     */
-  private val shCache = new java.util.concurrent.ConcurrentHashMap[String, Materialized]()
   private[operators] def shingleTable(s: SparkSession, dir: String): DataFrame =
-    materializedTable(shCache, s, dir, "shtable")(shingles(corpus(s, dir, perturb = true)))
+    materializedTable(s, dir, "shtable")(shingles(corpus(s, dir, perturb = true)))
 
   private[operators] def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     val sigs = signatureTable(s, dir)
@@ -612,77 +486,41 @@ object Dedup {
     * cross-crawl truth. See ll5's doc comment for the key-width
     * trade.
     */
-  /** The maintained SIMHASH fingerprint table — the same
-    * build-once-read-everywhere storage story as the shingle /
-    * signature tables: fingerprints are index state a real pipeline
-    * maintains as documents arrive, so ll5's pair generation, ev3's
-    * eval and every bench pass read one columnar (doc_id, sim_lo,
-    * sim_hi) scan instead of re-hashing the corpus per call — and the
-    * 1%-sampled bucket census (the escalation planner statistic)
-    * becomes a trivial scan of three long columns instead of a
-    * corpus-text pass (the r14 verdict's ll5 census-constant item).
+  /** The maintained SIMHASH fingerprint table (doc_id, sim_lo,
+    * sim_hi): ll5's pair generation, ev3's eval and the 1%-sampled
+    * bucket census (the escalation planner statistic) scan three long
+    * columns instead of re-hashing the corpus text.
     */
-  private val simCache = new java.util.concurrent.ConcurrentHashMap[String, Materialized]()
   private[operators] def simhashTable(s: SparkSession, dir: String): DataFrame =
-    materializedTable(simCache, s, dir, "simtable")(simhash(corpus(s, dir, perturb = true)))
+    materializedTable(s, dir, "simtable")(simhash(corpus(s, dir, perturb = true)))
 
   /** The maintained CDC chunk-occurrence table — (doc_id, h, nw), one
-    * row per content-defined chunk. Same storage story as the shingle
-    * / signature / simhash tables: chunking is a pure per-doc
-    * derivation over the raw documents table (no twins — CDC dedup
-    * measures the corpus as crawled), so the index splices per-doc in
-    * refreshIncrementally and ll18's per-query cost becomes a columnar
-    * 3-column scan + the hash-count aggregate instead of re-chunking
-    * the corpus text each call (the one ≈linear K=8 exponent on the
-    * r19 board was exactly that re-chunk).
+    * row per content-defined chunk of the raw documents (no twins —
+    * CDC dedup measures the corpus as crawled). ll18 scans it instead
+    * of re-chunking the corpus text (the one ≈linear K=8 exponent on
+    * the r19 board was that re-chunk).
     */
-  private val cdcCache = new java.util.concurrent.ConcurrentHashMap[String, Materialized]()
   private[operators] def cdcChunkTable(s: SparkSession, dir: String): DataFrame =
-    materializedTable(cdcCache, s, dir, "cdctable")(
+    materializedTable(s, dir, "cdctable")(
       cdcChunks(Tables.documents(s, dir)))
 
-  /** Build-once STREAMED state under the ts9 convention, with
-    * [[materializedTable]]'s reclaim rule: one fold per (session,
-    * dir, source-table watermark), ledgered so the first-touch cost
-    * never reads as drift; a corpus moved mid-session rebuilds under
-    * the new watermark and the SUPERSEDED state dir is deleted (the
-    * r16 scratch-reclaim rule — the previous key's corpus-sized
-    * parquet otherwise accumulates in tmp for the session's life).
-    * Shared by ll18b (CdcStream) and ll37 (GraphStream).
+  /** Build-once STREAMED state: one fold per (session, dir,
+    * source-table watermark) into a [[graft.State]] scratch dir.
+    * Shared by ll18b (CdcStream), ll37 (GraphStream) and l8e/l8f
+    * (IdentityStream).
     */
-  private[operators] def streamedState(
-      cache: java.util.concurrent.ConcurrentHashMap[String, (String, String)],
-      s: SparkSession, dir: String, tag: String, watermarkTable: String)
-      (fold: String => Unit): String = {
-    val key = s.sparkContext.applicationId + "|" + dir + "|" + tag
-    val ver = Tables.snapshotVersion(s, dir, watermarkTable)
-    cache.compute(key, (_, old) => {
-      if (old != null && old._1 == ver) old
-      else {
-        val t0 = System.nanoTime()
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          s"/graft-$tag-" + java.security.MessageDigest.getInstance("MD5")
-            .digest((key + "|" + ver).getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString
-        // a previous session's leftover state would double-fold
-        dropScratch(s, base)
-        fold(base)
-        buildLedger.merge(tag + "state", (1L, (System.nanoTime() - t0) / 1e9),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-        if (old != null) dropScratch(s, old._2) // superseded watermark
-        (ver, base)
-      }
-    })._2
-  }
+  private[operators] def streamedState(s: SparkSession, dir: String, tag: String,
+                                       watermarkTable: String)
+                                      (fold: String => Unit): String =
+    graft.State.scratch(s, dir, tag + "state",
+      Tables.snapshotVersion(s, dir, watermarkTable)) { base => fold(base); base }
 
   /** The MAINTAINED streamed CDC state ll18b reads: documents fold
     * through CdcStream as three interleaved batches, then LSM-compact
     * with the last batch held in-flight.
     */
-  private val cdcStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def streamedCdcState(s: SparkSession, dir: String): String =
-    streamedState(cdcStreamCache, s, dir, "ll18b", "documents") { base =>
+    streamedState(s, dir, "ll18b", "documents") { base =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       (0 to 2).foreach { b =>
         graft.streaming.CdcStream.processBatch(s,
@@ -692,25 +530,11 @@ object Dedup {
         excludeBatchId = 2L)
     }
 
-  /** Test hook: the scratch parquet path currently registered for a
-    * maintained index table, if built — lets MaintainedTableSpec pin
-    * the reclaim contract (superseded path deleted, live path present)
-    * without exposing the cache itself.
-    */
+  /** Test hook: the scratch parquet path registered for a maintained
+    * table, if built. */
   private[graft] def registeredScratchPath(s: SparkSession, dir: String,
-                                           name: String): Option[String] = {
-    val cache = name match {
-      case "shtable" => shCache
-      case "sigtable" => sigCache
-      case "simtable" => simCache
-      case "postings" => Search.postingsCache
-      case "cdctable" => cdcCache
-      case "wintable" => winCache
-      case "cp6wintable" => Pipeline.cp6WinCache
-      case _ => return None
-    }
-    Option(cache.get(s.sparkContext.applicationId + "|" + dir + "|" + name)).map(_.path)
-  }
+                                           name: String): Option[String] =
+    graft.State.path(s, dir, name)
 
   private[operators] def simhashPairs(s: SparkSession, dir: String): DataFrame =
     simhashPairsOf(simhashTable(s, dir))
@@ -858,17 +682,13 @@ object Dedup {
   /** The MAINTAINED 50-token window-hash index over ll33's corpus —
     * (doc_id, pos, whash), one ~24-byte row per corpus token, the
     * exact store SubstrStream maintains incrementally (its `wins`
-    * store). Same storage story as the shingle/signature/cdc tables:
-    * the corpus-text pass (split + per-window md5 — the dominant cost
-    * of the substring query, and the r19 board's worst standing scale
-    * probe at K=8 0.960 precisely because it re-ran per query) runs
-    * once per corpus snapshot; ll33's per-query cost becomes a
-    * columnar 3-column scan + the hash-count aggregate + the island
-    * merge. Spliced per-doc on crawl deltas in refreshIncrementally.
+    * store). The corpus-text pass (split + per-window md5 — the
+    * substring query's dominant cost, and the r19 board's worst scale
+    * probe at K=8 0.960 while it re-ran per query) runs once per corpus
+    * version.
     */
-  private val winCache = new java.util.concurrent.ConcurrentHashMap[String, Materialized]()
   private[operators] def substrWinTable(s: SparkSession, dir: String): DataFrame =
-    materializedTable(winCache, s, dir, "wintable")(
+    materializedTable(s, dir, "wintable")(
       windowHashes(ll33AugOf(
         Tables.documents(s, dir).select(col("doc_id"), col("text"))), 50))
 
@@ -1297,7 +1117,7 @@ object Dedup {
     // occurrences and ADDITIVE count deltas fold incrementally, state
     // LSM-compacts with the last batch in-flight, and the report
     // joins one occurrence scan to the summed counts. Fold runs once
-    // per (session, dir) and is ledgered (the ts9/ll37 convention);
+    // per corpus version (streamedState, the ts9/ll37 convention);
     // the oracle is ll18's verbatim — fold ≡ rebuild, gate-proved.
     "ll18b_cdc_streamed" -> ((s, dir) =>
       graft.streaming.CdcStream.dedupReport(s, streamedCdcState(s, dir))),
@@ -1424,8 +1244,7 @@ object Dedup {
       // it again — un-materialized, each touch re-split and re-hashed
       // the whole remapped corpus (the r14 bench's #3 constant)
       val sh = lowEntropyShingleTable(s, dir)
-      jaccardPairsOf(sh, lowEntropySignatureTable(s, dir),
-        "ll6b_jaccard_lsh_budget")
+      jaccardPairsOf(sh, lowEntropySignatureTable(s, dir))
     }),
 
     // N-GRAM JACCARD EVALUATION against the planted two-crawl ground
@@ -1473,8 +1292,7 @@ object Dedup {
       import sess.implicits._
       val sh = shingleTable(s, dir)
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val scored = jaccardPairsOf(sh, signatureTable(s, dir),
-          "ll30_threshold_sweep", minJaccardMille = 500L)
+      val scored = jaccardPairsOf(sh, signatureTable(s, dir), minJaccardMille = 500L)
         .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
         .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
         .withColumn("jp", expr("n_common * 1000 DIV (sza + szb - n_common)"))
@@ -1576,7 +1394,7 @@ object Dedup {
     */
   private[operators] def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleTable(s, dir) // stats + df/sizes/prefixes + verify joins, one materialization
-    jaccardPairsOf(sh, signatureTable(s, dir), "ll6_ngram_jaccard")
+    jaccardPairsOf(sh, signatureTable(s, dir))
   }
 
   /** The adaptive exact-Jaccard operator over any (doc_id, sh) table:
@@ -1586,12 +1404,8 @@ object Dedup {
     * one on the fly).
     */
   private[operators] def jaccardPairsOf(sh: DataFrame, sigs: => DataFrame,
-                                        tag: String,
-                                        minJaccardMille: Long = 600L): DataFrame = {
-    val branch = jaccardStrategy(sh)
-    if (sys.props.contains("graft.cc.profile"))
-      System.err.println(s"[graft] $tag strategy: $branch")
-    branch match {
+                                        minJaccardMille: Long = 600L): DataFrame =
+    jaccardStrategy(sh) match {
       case "prefix-filtered" => prefixFilteredJaccard(sh, minJaccardMille)
       case "inverted-index" => jaccardFromShingles(sh, minJaccardMille)
       case _ =>
@@ -1603,7 +1417,6 @@ object Dedup {
         val nb = if (minJaccardMille < 600L) 8 else 4
         exactJaccardOfCandidates(bandCandidates(sigs, nb), sh, minJaccardMille)
     }
-  }
 
   /** Low-entropy 16-symbol remap of the two-crawl corpus: every word
     * becomes the first hex digit of its md5, collapsing the shingle
@@ -1619,18 +1432,15 @@ object Dedup {
       expr("concat_ws(' ', transform(split(text, ' '), " +
         "w -> substring(md5(w), 1, 1)))").as("text")))
 
-  /** Materialized forms of the low-entropy shingle/signature tables —
-    * the same build-once-read-everywhere storage story as
-    * shingleTable/signatureTable, for the LSH-arm consumers (ll6b)
-    * whose adaptive pipeline touches the shingle frame four times.
+  /** Maintained low-entropy shingle/signature tables, for the LSH-arm
+    * consumers (ll6b) whose adaptive pipeline touches the shingle frame
+    * four times.
     */
-  private val leShCache = new java.util.concurrent.ConcurrentHashMap[String, Materialized]()
   private[operators] def lowEntropyShingleTable(s: SparkSession, dir: String): DataFrame =
-    materializedTable(leShCache, s, dir, "leshtable")(lowEntropyShingles(s, dir))
+    materializedTable(s, dir, "leshtable")(lowEntropyShingles(s, dir))
 
-  private val leSigCache = new java.util.concurrent.ConcurrentHashMap[String, Materialized]()
   private[operators] def lowEntropySignatureTable(s: SparkSession, dir: String): DataFrame =
-    materializedTable(leSigCache, s, dir, "lesigtable")(
+    materializedTable(s, dir, "lesigtable")(
       minhashSignatures(lowEntropyShingleTable(s, dir)))
 
   /** CDC chunk occurrences of a (doc_id, text) frame: one row per

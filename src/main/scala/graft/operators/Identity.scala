@@ -57,15 +57,7 @@ object Identity {
     */
   def connectedComponentsWithStats(edges: DataFrame, maxIter: Int = 30,
                                    smallGraphMax: Long = 100000L): (DataFrame, Int) = {
-    def prof[T](label: String)(f: => T): T =
-      if (sys.props.contains("graft.cc.profile")) {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[ccprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      } else f
     val spark = edges.sparkSession
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-cc-checkpoints")
 
     // Round materialization: scratch parquet (write + read-back with
     // the writer's schema), NOT Dataset.checkpoint()/persist(). A
@@ -78,7 +70,7 @@ object Identity {
     // a 240-node graph. The explicit read schema makes an EMPTY edge
     // set round-trippable (no schema inference over zero part files).
     val hconf = spark.sparkContext.hadoopConfiguration
-    val scratch = spark.sparkContext.getCheckpointDir.get +
+    val scratch = graft.State.checkpointDir(spark) +
       "/cc-scratch-" + java.util.UUID.randomUUID().toString.take(8)
     def materialize(df: DataFrame, name: String): DataFrame = {
       val p = s"$scratch/$name"
@@ -112,10 +104,10 @@ object Identity {
       _.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
     val nodes =
       if (numericInput) null
-      else prof("node dict")(materialize(
+      else materialize(
         e.select(col("sa").as("s"))
           .union(e.select(col("sb").as("s"))).distinct()
-          .withColumn("nid", monotonically_increasing_id() + 1L), "nodes"))
+          .withColumn("nid", monotonically_increasing_id() + 1L), "nodes")
     val enc =
       if (numericInput)
         e.select(col("sa").cast("long").as("a"), col("sb").cast("long").as("b"))
@@ -147,7 +139,7 @@ object Identity {
     // (rounds need the lineage cut) and re-counts from the parquet.
     val probe: Array[org.apache.spark.sql.Row] =
       if (smallGraphMax > 0L && smallGraphMax < Int.MaxValue.toLong)
-        prof("probe")(canonical.limit(smallGraphMax.toInt + 1).collect())
+        canonical.limit(smallGraphMax.toInt + 1).collect()
       else null
     val small = probe != null && probe.length <= smallGraphMax
 
@@ -159,8 +151,8 @@ object Identity {
     val edgeCount =
       if (small) probe.length.toLong
       else {
-        cur = prof("canonicalize")(materialize(canonical, "r0"))
-        prof("edge count")(cur.count())
+        cur = materialize(canonical, "r0")
+        cur.count()
       }
     val parts = math.max(2, math.min(
       spark.sparkContext.defaultParallelism * 2,
@@ -237,11 +229,11 @@ object Identity {
         import spark.implicits._
         rows.toDF("node", "c")
       } else {
-        var prevSig = prof("sig0")(signature(cur))
+        var prevSig = signature(cur)
         var converged = false
         while (!converged && i < maxIter) {
-          val next = prof("round")(materialize(smallStar(largeStar(cur)), s"r${i + 1}"))
-          val sig = prof("sig")(signature(next))
+          val next = materialize(smallStar(largeStar(cur)), s"r${i + 1}")
+          val sig = signature(next)
           rmScratch(s"r$i") // previous round's files no longer referenced
           cur = next
           converged = sig == prevSig
@@ -284,7 +276,7 @@ object Identity {
       // (and, through it, the label join) per CC call; the pin is
       // dropped as soon as the checkpoint files exist
       val pinned = decoded.persist(StorageLevel.MEMORY_AND_DISK)
-      val out = prof("decode+ckpt")(pinned.checkpoint())
+      val out = pinned.checkpoint()
       pinned.unpersist()
       (out, i)
     } finally {
@@ -328,27 +320,19 @@ object Identity {
     * rudder_identity_mappings as warehouse storage (identity.go:
     * 79-262) — consumers read the table, they do not re-run CC. This
     * mirrors that within a session for the l8 event-derived graph:
-    * resolved once per (application, sfDir) to scratch parquet, every
-    * reader (l8's rollup, l8c's health histogram) gets a plain scan.
+    * resolved once per events version into [[graft.State]] scratch
+    * parquet, every reader (l8's rollup, l8c's health histogram) gets a
+    * plain scan.
     */
-  private val mappingCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def eventMappings(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val path = mappingCache.computeIfAbsent(key, _ => {
+  private def eventMappings(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.State.scratch(s, dir, "idmap", Tables.snapshotVersion(s, dir, "events")) { p =>
       val ev = Tables.events(s, dir)
       val e1 = ev.select((col("user_id") + 100000L).as("src"), (col("user_id") % 37).as("dst"))
       val e2 = ev.select((col("user_id") + 100000L).as("src"), (col("user_id") % 53 + 1000L).as("dst"))
-      // MD5 of the full key, not a 32-bit hashCode: two (session,
-      // sfDir) keys colliding would overwrite each other's artifact
-      val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-        "/graft-idmap-" + java.security.MessageDigest.getInstance("MD5")
-          .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
       connectedComponents(e1.union(e2).distinct()).toDF("node", "comp")
         .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+      s.read.parquet(p)
+    }
 
   /** The l8e/l8f chain-island fixture graph: each 25-user island is a
     * path glued through shared device nodes (see l8d's note on why the
@@ -369,14 +353,6 @@ object Identity {
         .select((col("user_id") + 100000L).as("src"),
           (col("island") * 1000L + col("pos") + 1L).as("dst")))
       .distinct()
-
-  // the maintained streamed identity states (the ll18b/ll37/ts9
-  // convention): fold once per (session, dir, events watermark),
-  // ledgered, superseded dirs reclaimed
-  private val l8eStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val l8fStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   val defs: Map[String, Q] = Map(
     // l8: edges derived deterministically from events — each user links
@@ -447,13 +423,10 @@ object Identity {
     // closure over the UNION of all batches — proving the stream fold
     // equals a from-scratch CC, retro merges and compaction included.
     "l8e_identity_stream" -> ((s, dir) => {
-      // the fold runs ONCE per (session, dir, events watermark) under
-      // the shared Dedup.streamedState harness — ledgered, superseded
-      // state reclaimed (r19 ADVICE: the per-invocation temp dirs
-      // leaked and every bench pass re-paid the ~6 s fold); the
-      // per-query cost is then the maintained-mappings READ, the same
-      // contract ll18b/ll37/ts9 ship under
-      val state = Dedup.streamedState(l8eStreamCache, s, dir, "l8e", "events") { base =>
+      // the fold runs ONCE per events version (Dedup.streamedState);
+      // the per-query cost is then the maintained-mappings READ, the
+      // same contract ll18b/ll37/ts9 ship under
+      val state = Dedup.streamedState(s, dir, "l8e", "events") { base =>
         val u = chainIslandUsers(s, dir)
         def edgesOf(b: Int) = chainIslandEdges(u, col("pos") % 3 === b)
         (0 to 2).foreach { b =>
@@ -482,9 +455,9 @@ object Identity {
     // tombstone decomposition must land exactly on a from-scratch
     // recompute.
     "l8f_identity_unmerge_stream" -> ((s, dir) => {
-      // same maintained-state convention as l8e: fold once per
-      // (session, dir, events watermark), read per query
-      val state = Dedup.streamedState(l8fStreamCache, s, dir, "l8f", "events") { base =>
+      // same maintained-state convention as l8e: fold once per events
+      // version, read per query
+      val state = Dedup.streamedState(s, dir, "l8f", "events") { base =>
         val u = chainIslandUsers(s, dir)
         def edgesOf(b: Int) = chainIslandEdges(u, col("pos") % 2 === b)
         (0 to 1).foreach { b =>

@@ -1,9 +1,8 @@
 package graft.operators
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.{Q, Tables}
+import graft.{Q, State, Tables}
 import graft.sinks.Sinks
 import graft.sources.Readers
 import org.apache.spark.sql.expressions.Window
@@ -27,7 +26,7 @@ object Lifecycle {
     // written partitioned by table and read back through the CSV
     // reader.
     "l5_load_file_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_l5").toString
+      val tmp = State.scratchDir(s, "l5")
       val ev = Tables.events(s, dir).select(
         col("event_type").as("table_name"),
         col("event_id"), col("user_id"), col("value"))
@@ -49,7 +48,7 @@ object Lifecycle {
     // l5: any loss in the ORC encoder, stripe split, or partition
     // routing breaks the hash.
     "l5c_orc_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_l5c").toString
+      val tmp = State.scratchDir(s, "l5c")
       val ev = Tables.events(s, dir).select(
         col("event_type").as("table_name"),
         col("event_id"), col("user_id"), col("value"))
@@ -128,7 +127,7 @@ object Lifecycle {
       val ev = Tables.events(s, dir).select(col("event_id"), col("event_type"),
         (col("event_type") === "error").as("is_error"))
       def roundTrip(provider: String) = {
-        val tmp = Files.createTempDirectory(s"graft_l5b_$provider").toString
+        val tmp = State.scratchDir(s, s"l5b_$provider")
         Sinks.writeProviderLoadFiles(ev, tmp, provider, fmtTs)
         val hasLoadedAt = provider == "BQ"
         val ddl = "event_id STRING, event_type STRING, is_error STRING, uuid_ts STRING" +
@@ -153,7 +152,7 @@ object Lifecycle {
     // dead-letter layout (sorted by failed_at, partitioned by date),
     // read back and rolled up against the oracle on the source table.
     "d7_error_stash_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_d7").toString
+      val tmp = State.scratchDir(s, "d7")
       val failed = Tables.events(s, dir)
         .filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id"), col("ts").as("failed_at"),
@@ -170,7 +169,7 @@ object Lifecycle {
     // partitioned) THEN deleted from the live table; the check reads
     // the archive back and proves live+archived == original.
     "d8_archiver" -> ((s, dir) => {
-      val base = Files.createTempDirectory("graft_d8").toString
+      val base = State.scratchDir(s, "d8")
       val live = s"$base/live"
       val archive = s"$base/archive"
       val cutoff = "2024-01-15 00:00:00"
@@ -230,7 +229,7 @@ object Lifecycle {
     // as-of reads end-to-end. SinksSpec pins the crash-atomicity
     // (a failed commit leaves the previous latest readable).
     "l13_snapshot_versioning" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_l13").toString
+      val tmp = State.scratchDir(s, "l13")
       val dim = Tables.customer(s, dir).select(col("c_custkey"), col("c_acctbal"))
       val v0 = Sinks.versionedWrite(dim, tmp)
       val v1 = Sinks.versionedWrite(
@@ -248,7 +247,7 @@ object Lifecycle {
     }),
 
     "l10_datalake_roundtrip" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_l10").toString
+      val tmp = State.scratchDir(s, "l10")
       Sinks.datalakeWrite(
         Tables.events(s, dir).select(col("event_id"), col("ts"), col("value")), tmp)
       s.read.parquet(tmp)
@@ -267,7 +266,7 @@ object Lifecycle {
     // proves BOTH multi-batch delivery and exactly-once content
     // (every row lands once across batch boundaries).
     "d6_streaming_sink" -> ((s, dir) => {
-      val base = Files.createTempDirectory("graft_d6").toString
+      val base = State.scratchDir(s, "d6")
       val in = s"$base/in"
       val out = s"$base/out"
       val ckpt = s"$base/ckpt"
@@ -321,7 +320,7 @@ object Lifecycle {
     // S6: gzip JSON-lines staging file scan — events serialized to
     // the staging shape, written .json.gz, scanned back.
     "s6_staging_scan" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_s6").toString
+      val tmp = State.scratchDir(s, "s6")
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").option("compression", "gzip").json(tmp)
@@ -341,7 +340,7 @@ object Lifecycle {
     // values intact, and that the returned kept-count matches what a
     // reader sees after the swap.
     "l9_retention_rewrite" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_l9").toString + "/t"
+      val tmp = State.scratchDir(s, "l9") + "/t"
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.parquet(tmp)
@@ -362,7 +361,7 @@ object Lifecycle {
     // its keys dictate (a misrouted row changes some partition's
     // count/min/max and breaks the hash).
     "d4_object_sink" -> ((s, dir) => {
-      val tmp = Files.createTempDirectory("graft_d4").toString
+      val tmp = State.scratchDir(s, "d4")
       Sinks.batchObjectSink(
         Tables.events(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type"),
@@ -390,7 +389,7 @@ object Lifecycle {
     "rg1_regulation_delete" -> ((s, dir) => {
       val sess = s
       import sess.implicits._
-      val tmp = Files.createTempDirectory("graft_rg1").toString + "/corpus"
+      val tmp = State.scratchDir(s, "rg1") + "/corpus"
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
           (col("event_id") % 6).as("obj"))
@@ -428,7 +427,7 @@ object Lifecycle {
     // and status derived from the upload id, created_at = the batch's
     // max event time.
     "wa1_warehouse_archive" -> ((s, dir) => {
-      val base = Files.createTempDirectory("graft_wa1").toString
+      val base = State.scratchDir(s, "wa1")
       val live = s"$base/staging_ledger"
       val archive = s"$base/archive"
       val files = Tables.events(s, dir).select(
@@ -446,14 +445,14 @@ object Lifecycle {
         // upload-grain (corpus/2000 rows) but derived from a full
         // events scan+agg, and the two archiver passes re-evaluate it
         // ~5x (count + page collects per call) — pin it for the
-        // lifecycle's duration, released before returning
+        // lifecycle's duration, released on every path
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (nEligible, first) =
-        Sinks.warehouseArchivePaged(s, live, archive, eligible, "wa1_job")
-      val (_, resumed) =
-        Sinks.warehouseArchivePaged(s, live, archive, eligible, "wa1_job")
-      val noneEligible = eligible.isEmpty
-      eligible.unpersist()
+      val (nEligible, first, resumed, noneEligible) =
+        try {
+          val (n, first) = Sinks.warehouseArchivePaged(s, live, archive, eligible, "wa1_job")
+          val (_, resumed) = Sinks.warehouseArchivePaged(s, live, archive, eligible, "wa1_job")
+          (n, first, resumed, eligible.isEmpty)
+        } finally eligible.unpersist()
       val archived = (if (noneEligible) // nothing written: glob would throw
           s.emptyDataFrame
             .withColumn("staging_file_id", lit(0L)).withColumn("upload", lit(0L))
@@ -513,7 +512,7 @@ object Lifecycle {
           .take(4).map("%02x".format(_)).mkString
         java.lang.Long.parseLong(hex, 16) % 3 == 0
       }
-      val ledger = Files.createTempDirectory("graft_sj1").toString + "/ledger"
+      val ledger = State.scratchDir(s, "sj1") + "/ledger"
       val (e1, t1) = Sinks.sourceJobsRun(s, ledger, jobs, 1, 4, ok)
       val (e2, _) = Sinks.sourceJobsRun(s, ledger, jobs, 1, 4, ok)
       val wLatest = Window.partitionBy(col("job_id")).orderBy(col("seq").desc)
@@ -555,7 +554,7 @@ object Lifecycle {
           .take(4).map("%02x".format(_)).mkString
         java.lang.Long.parseLong(hex, 16) % 3 == 0
       }
-      val ledger = Files.createTempDirectory("graft_nt1").toString + "/ledger"
+      val ledger = State.scratchDir(s, "nt1") + "/ledger"
       val (executed, orphans, _, batchesDone) = graft.sinks.Notifier.run(
         s, ledger, jobs, maxAttempt = 0, nWorkers = 12,
         orphanTimeoutRounds = 2, outcome = coin,

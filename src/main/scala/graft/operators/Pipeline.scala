@@ -21,10 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  private val cp5AttCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
-  private val cp6AttCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
 
   /** cp6's substring window width. 15 tokens (ll15's threshold), NOT
     * ll33's 50: this corpus's quality gate caps survivors at 100
@@ -89,17 +85,11 @@ object Pipeline {
   }
 
   /** The MAINTAINED cp6W-token window-hash index over cp6's corpus —
-    * the substrWinTable move at the release pipeline's operating
-    * point: the survivor-corpus window pass (the substring stage's
-    * dominant cost) becomes a pruned read of a per-doc-spliceable
-    * columnar index instead of a per-build re-hash of the twin-crawl
-    * text.
+    * substrWinTable at the release pipeline's operating point.
     */
-  private[operators] val cp6WinCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
   private[graft] def cp6WinTable(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
-    Dedup.materializedTable(cp6WinCache, s, dir, "cp6wintable")(
+    Dedup.materializedTable(s, dir, "cp6wintable")(
       Dedup.windowHashes(cp6Corpus(s, dir), cp6W))
 
   /** The crawl-aligned embedding snapshots (the second crawl's
@@ -502,14 +492,10 @@ object Pipeline {
     // the two sqrt-bucketed prefix sums (PPS cumsum + shard packing).
     "cp5_pretraining_release" -> ((s, dir) => {
       // The attributed per-doc gate verdicts (att) are deterministic
-      // given the corpus snapshot, so they ride the maintained-table
-      // pattern instead of session persists: built once per (session,
-      // dir, content watermark), written to scratch parquet, and every
-      // consumer below (ledger, survivors, conservation row) plus
-      // every later invocation (bench pass 2) reads one columnar scan.
-      // This replaced two MEMORY_AND_DISK persists that were never
-      // unpersisted — repeated invocations accumulated dead cache.
-      val att = Dedup.materializedTable(cp5AttCache, s, dir, "cp5att",
+      // given the corpus snapshot, so they are a maintained table: every
+      // consumer below (ledger, survivors, conservation row) and every
+      // later invocation reads one columnar scan.
+      val att = Dedup.materializedTable(s, dir, "cp5att",
         Seq("documents", "embeddings"))(cp5Attribution(s, dir))
       cp5ReleaseOf(s, dir, att)
     }),
@@ -530,7 +516,7 @@ object Pipeline {
     // map-side-combined hash count, one join back, per-doc interval
     // merge — linear in survivor tokens, never pairwise).
     "cp6_release_substr" -> ((s, dir) => {
-      val att = Dedup.materializedTable(cp6AttCache, s, dir, "cp6att",
+      val att = Dedup.materializedTable(s, dir, "cp6att",
         Seq("documents", "embeddings"))(
         cp6AttributionOf(s, dir, cp6Corpus(s, dir), cp5TwinVecs(s, dir),
           winTable = Some(cp6WinTable(s, dir))))

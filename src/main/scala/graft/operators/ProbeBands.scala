@@ -29,7 +29,7 @@ object ProbeBands {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val base = java.nio.file.Files.createTempDirectory("graft_bands").toString
+    val base = graft.State.scratchDir(spark, "bands")
     val d1 = s"$base/x1"
     val dk = s"$base/x$k"
     graft.BenchScale.replicate(spark, sfDir, d1, 1)

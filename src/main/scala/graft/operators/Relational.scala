@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, State, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -408,8 +408,7 @@ object Relational {
         expr("concat('ws', user_id % 3, '-', " +
           "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 8)")
           .as("partition_id"))
-      val ledger = java.nio.file.Files.createTempDirectory("graft_jd2")
-        .toString + "/ledger"
+      val ledger = State.scratchDir(s, "jd2") + "/ledger"
       graft.sinks.Sinks.addReadExcludedPartitionIDs(s, ledger,
         (0 until 3).flatMap(w => Seq(s"ws$w-1", s"ws$w-4")))
       graft.sinks.Sinks.addReadExcludedPartitionIDs(s, ledger, Seq("ws0-1"))
@@ -530,8 +529,7 @@ object Relational {
     // it exactly.
     "q11b_users_incremental" -> ((s, dir) => {
       val cutoff = "2024-01-15 00:00:00"
-      val existingDir =
-        java.nio.file.Files.createTempDirectory("graft_q11b").toString + "/users"
+      val existingDir = State.scratchDir(s, "q11b") + "/users"
       usersOf(Tables.events(s, dir).filter(col("ts") < cutoff))
         .write.parquet(existingDir)
       val existing = s.read.parquet(existingDir) // from disk: no event rescan

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, State, Tables}
 import graft.functions.JsonFlatten
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -474,10 +474,11 @@ object Router {
       // query constructions (smoke/guard/bench passes) stay idempotent
       val dbName = s"graft_val2_${java.util.UUID.randomUUID.toString.replace("-", "")}"
       val url = s"jdbc:derby:memory:$dbName;create=true"
-      val okStore = java.nio.file.Files.createTempDirectory("graft_val2_store")
+      val okStore = java.nio.file.Paths.get(State.scratchDir(s, "val2_store"))
       // a destination whose object storage is a plain FILE: the store
       // write throws, step 1 fails, steps 2-6 must never run
-      val badStore = java.nio.file.Files.createTempFile("graft_val2_bad", ".notadir")
+      val badStore = java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(State.scratchDir(s, "val2_bad"), "store.notadir"))
       val rows =
         try runSteps("d_ok", okStore, url) ++ runSteps("d_bad", badStore, url)
         finally {

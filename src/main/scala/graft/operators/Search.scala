@@ -37,12 +37,10 @@ object Search {
     * story, the signature-table convention applied to retrieval: a
     * real search deployment does not re-tokenize and re-count the
     * corpus per query, it maintains an inverted index. The (doc_id,
-    * w, tf) postings materialize once per (session, dir, content
-    * watermark) via Dedup.materializedTable (scratch parquet + hot
-    * persist, stale-proof under corpus mutation), and every
-    * frequency-based retrieval query — ts1/ts2/ts3/ts5/ts8/ev11 —
-    * reads one columnar scan. Doc lengths derive from the index
-    * (Σ tf per doc, index-grain). ts4's positional adjacency and
+    * w, tf) postings materialize once per corpus version (a
+    * [[graft.State]] table), and every frequency-based retrieval
+    * query — ts1/ts2/ts3/ts5/ts8/ev11 — reads one columnar scan. Doc
+    * lengths derive from the index (Σ tf per doc, index-grain). ts4's positional adjacency and
     * ts6's character-level typo stream read raw text by design:
     * positions and characters are different artifacts (a positional /
     * suffix index), not this table.
@@ -56,11 +54,9 @@ object Search {
     d.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
 
-  private[operators] val postingsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
   private[operators] def postingsTable(s: org.apache.spark.sql.SparkSession,
                                        dir: String): org.apache.spark.sql.DataFrame =
-    Dedup.materializedTable(postingsCache, s, dir, "postings")(
+    Dedup.materializedTable(s, dir, "postings")(
       postingsOf(Tables.documents(s, dir)))
 
   /** (doc_id, dl) doc lengths off the postings index — index-grain. */
@@ -111,74 +107,48 @@ object Search {
         col("t_rank"), col("v_rank"))
   }
 
-  /** The MAINTAINED streamed retrieval state ts9 reads (one build per
-    * session + dir, the eventMappings convention): documents and
+  /** The MAINTAINED streamed retrieval state ts9 reads: documents and
     * embeddings fold through SearchStream / VectorStream as three
     * deterministic batches (ids mod 3) under a frozen IVF-PQ model
     * trained on the base embeddings, then LSM-compact with the last
     * batch held in-flight — exactly the state a live crawl stream
-    * maintains. Returns (stateDir, model).
+    * maintains. One [[graft.State]] entry per (session, dir, documents
+    * and embeddings watermarks); the model rides the same entry — it is
+    * trained on the embeddings snapshot the vector store encodes.
+    * Returns (stateDir, model, nDocs, totTok).
     */
-  private val streamedStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, Similarity.IvfPqModel, Long, Long)]()
   private def streamedRetrievalState(s: org.apache.spark.sql.SparkSession,
-                                     dir: String): (String, Similarity.IvfPqModel, Long, Long) = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    // keyed on BOTH source tables' content watermarks (the
-    // Dedup.streamedState convention): a corpus mutated mid-session
-    // rebuilds the streamed stores under the new snapshot instead of
-    // serving stale hybrid results, and the superseded state dir is
-    // reclaimed (r19 ADVICE). The model rides the same entry — it is
-    // trained on the embeddings snapshot the vector store encodes.
-    val ver = Tables.snapshotVersion(s, dir, "documents") + "|" +
-      Tables.snapshotVersion(s, dir, "embeddings")
-    val entry = streamedStateCache.compute(key, (_, old) => {
-      if (old != null && old._1 == ver) old
-      else {
-        val t0 = System.nanoTime()
-        val base = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-          "/graft-ts9-" + java.security.MessageDigest.getInstance("MD5")
-            .digest((key + "|" + ver).getBytes("UTF-8")).map("%02x".format(_)).mkString
-        // a previous session's leftover state would double-fold
-        Dedup.dropScratch(s, base)
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        // identical deterministic training input to the session-
-        // memoized frozen model (same quantization, count, sample
-        // steps), so reuse it instead of running a second trainer
-        // inside this fold; the memo rebuilds on the same embeddings
-        // watermark this state is keyed on
-        val model = Similarity.ivfPqModelOf(s, dir)
-        (0 to 2).foreach { b =>
-          graft.streaming.SearchStream.processBatch(s,
-            docs.filter(col("doc_id") % 3 === b), s"$base/search", b.toLong)
-          graft.streaming.VectorStream.processBatch(s,
-            emb.filter(col("vec_id") % 3 === b), s"$base/vector", model, b.toLong)
-        }
-        graft.streaming.SearchStream.compactState(s, s"$base/search",
-          targetFiles = 1, excludeBatchId = 2L)
-        graft.streaming.VectorStream.compactState(s, s"$base/vector",
-          targetFiles = 1, excludeBatchId = 2L)
-        // the BM25 leg's two state-derived scalars (ledger doc count,
-        // index token total) are pure functions of the state just
-        // folded — compute them once here instead of two extra driver
-        // actions on every ts9 read
-        val nDocs = graft.streaming.SearchStream.readDocCount(s, s"$base/search")
-        val totTok = Option(graft.streaming.SearchStream
-            .readPostings(s, s"$base/search")
-            .agg(sum(col("tf"))).first().get(0))
-          .fold(0L)(_.asInstanceOf[Long])
-        // this is the most expensive per-session maintained build (one
-        // trainer + 6 stream folds + 2 compactions) — ledger it like the
-        // materialized tables, or its first-touch cost reads as drift
-        Dedup.buildLedger.merge("ts9state", (1L, (System.nanoTime() - t0) / 1e9),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-        if (old != null) Dedup.dropScratch(s, old._2) // superseded snapshot
-        (ver, base, model, nDocs, totTok)
+                                     dir: String): (String, Similarity.IvfPqModel, Long, Long) =
+    graft.State.scratch(s, dir, "ts9state", Tables.snapshotVersion(s, dir, "documents") +
+        "|" + Tables.snapshotVersion(s, dir, "embeddings")) { base =>
+      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+      // identical deterministic training input to the session-
+      // memoized frozen model (same quantization, count, sample
+      // steps), so reuse it instead of running a second trainer
+      // inside this fold
+      val model = Similarity.ivfPqModelOf(s, dir)
+      (0 to 2).foreach { b =>
+        graft.streaming.SearchStream.processBatch(s,
+          docs.filter(col("doc_id") % 3 === b), s"$base/search", b.toLong)
+        graft.streaming.VectorStream.processBatch(s,
+          emb.filter(col("vec_id") % 3 === b), s"$base/vector", model, b.toLong)
       }
-    })
-    (entry._2, entry._3, entry._4, entry._5)
-  }
+      graft.streaming.SearchStream.compactState(s, s"$base/search",
+        targetFiles = 1, excludeBatchId = 2L)
+      graft.streaming.VectorStream.compactState(s, s"$base/vector",
+        targetFiles = 1, excludeBatchId = 2L)
+      // the BM25 leg's two state-derived scalars (ledger doc count,
+      // index token total) are pure functions of the state just
+      // folded — compute them once here instead of two extra driver
+      // actions on every ts9 read
+      val nDocs = graft.streaming.SearchStream.readDocCount(s, s"$base/search")
+      val totTok = Option(graft.streaming.SearchStream
+          .readPostings(s, s"$base/search")
+          .agg(sum(col("tf"))).first().get(0))
+        .fold(0L)(_.asInstanceOf[Long])
+      (base, model, nDocs, totTok)
+    }
 
   val defs: Map[String, Q] = Map(
 

@@ -458,8 +458,7 @@ object Similarity {
     // session-memoized model every other frozen-index consumer shares,
     // so reuse it instead of re-running the trainer's sample collects
     // per invocation — bit-identical centroids/codebooks by
-    // determinism, and the memo already rebuilds on the embeddings
-    // content watermark
+    // determinism
     val model = ivfPqModelOf(s, dir)
     val qeCur = quant(cur)
     val dqed = ivfPqReconstruct(ivfPqEncode(qeCur, model), model)
@@ -528,53 +527,31 @@ object Similarity {
   private[graft] val cd2DriftRule: String =
     "IF(vec_id % 7 = 2 AND i < 32, CAST(CAST(x AS DOUBLE) * 1.1 AS FLOAT), x)"
 
-  // maintained coded-table memos (the signature-table convention):
-  // one build per (session, dir, embeddings content watermark)
-  private val ll24Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
-  private val ll34Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
-
-  // the frozen IVF-PQ model, memoized per (session, dir, embeddings
-  // watermark): the trainer is bounded-sample + driver-side, but its
-  // collect is not free and every consumer of the shared coded table
-  // (ll34's nprobe=1 read, ll35's multi-cell probe) needs the SAME
-  // centroids for query-side cell ranking
-  // keyed on (appId, dir) with the embeddings watermark IN THE VALUE
-  // (the materializedTable replace-and-reclaim convention, r19
-  // ADVICE): a session over a mutating corpus replaces the superseded
-  // model instead of accumulating one trained IvfPqModel per snapshot
-  // in driver memory indefinitely
-  private val ivfPqModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, IvfPqModel)]()
+  // the frozen IVF-PQ model, one per embeddings version: the trainer
+  // is bounded-sample + driver-side, but its collect is not free and
+  // every consumer of the shared coded table (ll34's nprobe=1 read,
+  // ll35's multi-cell probe) needs the SAME centroids for query-side
+  // cell ranking
   private[operators] def ivfPqModelOf(s: org.apache.spark.sql.SparkSession,
-                                      dir: String): IvfPqModel = {
-    val key = s.sparkContext.applicationId + "|" + dir
-    val ver = Tables.snapshotVersion(s, dir, "embeddings")
-    ivfPqModelCache.compute(key, (_, old) => {
-      if (old != null && old._1 == ver) old
-      else {
-        val qe = Tables.embeddings(s, dir)
-          .withColumn("q",
-            expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"))
-          .select(col("vec_id"), col("q"))
-        (ver, trainIvfPq(qe, Tables.countStat(s, dir, "embeddings")))
-      }
-    })._2
-  }
+                                      dir: String): IvfPqModel =
+    graft.State.memo(s, dir, "ivfpqmodel", Tables.snapshotVersion(s, dir, "embeddings")) {
+      val qe = Tables.embeddings(s, dir)
+        .withColumn("q",
+          expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"))
+        .select(col("vec_id"), col("q"))
+      trainIvfPq(qe, Tables.countStat(s, dir, "embeddings"))
+    }
 
-  /** The MAINTAINED coded table (the signature-table / postings
-    * convention): trainer + encode + reconstruction run once per
-    * (session, dir, content watermark) and every later query reads one
-    * columnar scan — a deployment maintains its ANN index, it does not
-    * re-train per search (VectorStream is the streaming form of the
-    * same contract). No persists inside the build: it runs once, and
+  /** The MAINTAINED coded table: trainer + encode + reconstruction
+    * run once per embeddings version — a deployment maintains its ANN
+    * index, it does not re-train per search (VectorStream is the
+    * streaming form). No persists inside the build: it runs once, and
     * the scans it repeats are cheap next to the one-time codegen of
     * the 128-expr encode.
     */
   private def ll34Coded(s: org.apache.spark.sql.SparkSession,
                         dir: String): DataFrame =
-    Dedup.materializedTable(ll34Cache, s, dir, "ll34coded",
+    Dedup.materializedTable(s, dir, "ll34coded",
       Seq("embeddings")) {
       val qe = Tables.embeddings(s, dir)
         .withColumn("q",
@@ -587,17 +564,13 @@ object Similarity {
     }
 
   /** The MAINTAINED kNN graph (vec_id, rank, neighbor_id) — every
-    * vector's top-3 cosine neighbors from ll28's LSH-bucketed build,
-    * under the signature-table convention: the corpus-sized
-    * construction (the bucket self-join + per-vector window) runs once
-    * per (session, dir, embeddings watermark); ll28 serves the graph
-    * and ll36's beam search walks it per query.
+    * vector's top-3 cosine neighbors from ll28's LSH-bucketed build
+    * (the bucket self-join + per-vector window, once per embeddings
+    * version); ll28 serves the graph and ll36's beam search walks it.
     */
-  private val knnCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
   private[operators] def knnGraphTable(s: org.apache.spark.sql.SparkSession,
                                        dir: String): DataFrame =
-    Dedup.materializedTable(knnCache, s, dir, "knngraph", Seq("embeddings"))(
+    Dedup.materializedTable(s, dir, "knngraph", Seq("embeddings"))(
       bucketTop3(lshBucketed(Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding")))))
 
@@ -661,11 +634,9 @@ object Similarity {
     * bucket) — ~256 rows, the graph index's "upper layer"; rebuilt
     * with the graph on the embeddings watermark.
     */
-  private val routeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.Materialized]()
   private[operators] def knnRouteTable(s: org.apache.spark.sql.SparkSession,
                                        dir: String): DataFrame =
-    Dedup.materializedTable(routeCache, s, dir, "knnroute", Seq("embeddings"))(
+    Dedup.materializedTable(s, dir, "knnroute", Seq("embeddings"))(
       lshBucketed(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
         .groupBy(col("bucket")).agg(min(col("vec_id")).as("entry")))
 
@@ -738,18 +709,15 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("node").as("neighbor_id"))
   }
 
-  /** The MAINTAINED streamed graph state ll37 reads (the shared
-    * [[Dedup.streamedState]] harness — fold once per session + dir +
-    * embeddings watermark, ledgered, superseded dirs reclaimed):
-    * embeddings fold through GraphStream as three interleaved
-    * batches, then LSM-compact with the last batch held in-flight —
-    * exactly the state a live embedding stream maintains.
+  /** The MAINTAINED streamed graph state ll37 reads (one
+    * [[Dedup.streamedState]] fold per embeddings version): embeddings
+    * fold through GraphStream as three interleaved batches, then
+    * LSM-compact with the last batch held in-flight — exactly the state
+    * a live embedding stream maintains.
     */
-  private val streamedGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def streamedGraphState(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String =
-    Dedup.streamedState(streamedGraphCache, s, dir, "ll37", "embeddings") { base =>
+    Dedup.streamedState(s, dir, "ll37", "embeddings") { base =>
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       (0 to 2).foreach { b =>
         graft.streaming.GraphStream.processBatch(s,
@@ -974,7 +942,7 @@ object Similarity {
       val dim = 64; val m = 8; val sd = dim / m; val k = 16
       val base = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       // maintained coded table, same convention (and note) as ll34's
-      val dqed = Dedup.materializedTable(ll24Cache, s, dir, "ll24coded",
+      val dqed = Dedup.materializedTable(s, dir, "ll24coded",
         Seq("embeddings")) {
       val qe = base.withColumn("q",
         expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"))
@@ -1244,7 +1212,7 @@ object Similarity {
     // maintained graph folds incrementally (later batches re-edging
     // earlier nodes — the retroactive case), and state LSM-compacts
     // with the last batch held in-flight. The fold runs once per
-    // (session, dir) and is ledgered (the ts9 convention — a live
+    // embeddings version (the ts9 convention — a live
     // deployment pays the fold as batches arrive, not per query);
     // graphWalk then reads the streamed graph + vecs. The oracle is
     // ll36's verbatim: fold ≡ rebuild and one shared read path mean

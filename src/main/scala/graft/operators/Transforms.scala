@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, State, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -146,7 +146,7 @@ object Transforms {
         expr("CASE WHEN CAST(conv(substring(md5(concat('wld|', id)), 1, 4), 16, 10) AS BIGINT) % 4 = 0 " +
           "THEN CAST(array() AS ARRAY<STRING>) " +
           "ELSE array(concat('src_', id % 10)) END").as("source_ids"))
-      val base = java.nio.file.Files.createTempDirectory("graft_t1c").toString
+      val base = State.scratchDir(s, "t1c")
       val live = s"$base/live"
       graft.sinks.Suppression.sync(s, live, feed.filter(col("seq") <= 120), 100)
       graft.sinks.Suppression.backupFull(s, live, s"$base/full")
@@ -529,8 +529,7 @@ object Transforms {
           concat(lit("src_"), col("user_id") % 5).as("source_id"),
           concat(lit("inst_"), col("event_id") % 2).as("instance_id"))
         .agg(sketch(col("uid")).as("registers"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_a2d").toString + "/reports"
+      val store = State.scratchDir(s, "a2d") + "/reports"
       minuteRows.write.mode("overwrite").parquet(store)
       val reports = s.read.parquet(store) // the STORED sketches, read back
       val wBatch = Window.partitionBy(col("window_start_us"))

@@ -69,11 +69,6 @@ object GraphStream {
     */
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                    batchId: Long): Unit = {
-    def prof[T](label: String)(f: => T): T =
-      if (sys.props.contains("graft.gs.profile")) {
-        val t0 = System.nanoTime(); val r = f
-        Console.err.println(f"[gsprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      } else f
     StateCompaction.heal(spark, stores.map(n => s"$stateDir/$n"))
     val prior = readVecsState(spark, stateDir, batchId)
     // first-write-wins: a re-delivered vector is skipped (re-embedding
@@ -87,8 +82,8 @@ object GraphStream {
       // the touched-bucket list is batch-bounded (≤ 256 under the
       // 8-hyperplane scheme) — a driver-side pruning list, the
       // VectorStream qCells precedent
-      val touched = prof("touched")(fresh.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0)))
+      val touched = fresh.select(col("bucket")).distinct()
+        .collect().map(_.getLong(0))
       val touchedGroups = touched.map(_ % BucketGroups).distinct
       val members = prior
         .map(_.filter(col("bgroup").isin(touchedGroups: _*) &&
@@ -107,18 +102,18 @@ object GraphStream {
       // every later store read pays the listing/open tax per file —
       // the same small-files rule as the vecs write below, sized by
       // the batch's own touched groups rather than a constant
-      prof("delta write")(delta
+      delta
         .coalesce(math.max(1, touchedGroups.length))
         .write.mode("overwrite")
-        .parquet(s"${graphDir(stateDir)}/batch_id=$batchId"))
+        .parquet(s"${graphDir(stateDir)}/batch_id=$batchId")
       // repartition on the partition column first (the d8 rule): a
       // dynamic-partition write otherwise lands tasks × groups tiny
       // files and every later pruned read pays the open() tax
-      prof("vecs write")(fresh
+      fresh
         .withColumn("bgroup", col("bucket") % BucketGroups)
         .repartition(col("bgroup"))
         .write.partitionBy("bgroup").mode("overwrite")
-        .parquet(s"${vecsDir(stateDir)}/batch_id=$batchId"))
+        .parquet(s"${vecsDir(stateDir)}/batch_id=$batchId")
     } finally fresh.unpersist()
   }
 

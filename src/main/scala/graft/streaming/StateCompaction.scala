@@ -127,20 +127,6 @@ private[streaming] object StateCompaction {
     fs.exists(p) && hasParquetUnder(fs, p)
   }
 
-  /** Memoized resolved store relations (the Tables.load discipline —
-    * §6 listing / driver work): `spark.read.parquet(paths…)` builds a
-    * fresh InMemoryFileIndex (driver re-listing of every path) and
-    * re-reads a parquet footer for the schema on EVERY call, and a
-    * walk-style consumer (ll37's hop collects, ts9's hybrid legs)
-    * issues several actions per query, each re-resolving both stores.
-    * One DataFrame per (application, store dir, content fingerprint) —
-    * the LOGICAL relation only, no rows cached; the fingerprint covers
-    * the visible file set (path|len|mtime), so a store mutated by the
-    * next batch fold re-resolves under its new version and the
-    * superseded entry is evicted.
-    */
-  private val relCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The store read every consumer shares: self-heal a crashed legacy
     * swap (the Sinks contract), list the partition dirs, keep the
     * VISIBLE set, and read only those (with the partition columns) —
@@ -171,21 +157,12 @@ private[streaming] object StateCompaction {
         }
         found
       }
+      // the resolved relation is memoized per visible-file fingerprint
+      // (the Tables.load move: no re-listing or footer read per call)
       if (withData.isEmpty) None
-      else {
-        val prefix = Seq(spark.sparkContext.applicationId, dir, "#state").mkString("|")
-        val key = prefix + "|" + md.digest().map("%02x".format(_)).mkString
-        if (!relCache.containsKey(key)) {
-          val it = relCache.keySet.iterator()
-          while (it.hasNext) {
-            val k = it.next()
-            if (k.startsWith(prefix + "|") && k != key) it.remove()
-          }
-        }
-        Some(relCache.computeIfAbsent(key, _ =>
-          spark.read.option("basePath", dir)
-            .parquet(withData.map(_._2.toString): _*)))
-      }
+      else Some(graft.State.memo(spark, dir, "relation",
+        md.digest().map("%02x".format(_)).mkString)(
+        spark.read.option("basePath", dir).parquet(withData.map(_._2.toString): _*)))
     }
   }
 

@@ -153,7 +153,7 @@ class DedupSpec extends SparkSpec {
     val dsh = Dedup.shingles(docsDf(denseDocs))
     assert(Dedup.jaccardStrategy(dsh) === "lsh-verified")
     val swept = collectPairs(Dedup.jaccardPairsOf(dsh,
-      Dedup.minhashSignatures(dsh), "spec-sweep", 500L))
+      Dedup.minhashSignatures(dsh), 500L))
     val denseNaive = collectPairs(Dedup.jaccardFromShingles(dsh, 500L))
     assert(swept.nonEmpty, "the budget arm should recover near-identical pairs")
     assert(swept.subsetOf(denseNaive),
