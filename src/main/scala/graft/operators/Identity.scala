@@ -38,6 +38,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object Identity {
 
+  /** Row bound of every in-driver identity path (see `smallGraphMax`). */
+  val SmallGraphMax: Long = 100000L
+
   /** Connected components over any orderable node type.
     * @param edges two-column DataFrame (src, dst), undirected.
     * @param smallGraphMax edge-count threshold below which the graph
@@ -50,13 +53,15 @@ object Identity {
     *   round sizing uses; pass 0 to force the distributed engine.
     *   Near-dup pair graphs and incremental identity deltas — tiny
     *   next to their corpora — live under it; a full 100 TB identity
-    *   graph goes distributed.
+    *   graph goes distributed. [[graft.streaming.IdentityStream]]'s
+    *   driver fold shares the default ([[SmallGraphMax]]) as its bound
+    *   on the batch and on each neighbourhood read.
     * @return ((node, comp) DataFrame in the input value domain where
     *         comp = min reachable node, iterations run — 0 on the
     *         union-find path)
     */
   def connectedComponentsWithStats(edges: DataFrame, maxIter: Int = 30,
-                                   smallGraphMax: Long = 100000L): (DataFrame, Int) = {
+                                   smallGraphMax: Long = SmallGraphMax): (DataFrame, Int) = {
     val spark = edges.sparkSession
 
     // Round materialization: scratch parquet (write + read-back with
@@ -208,26 +213,10 @@ object Identity {
     // parquet — restore/cleanup unconditionally.
     try {
       val stars: DataFrame = if (small) {
-        // In-driver min-union-find over the canonical long edges —
-        // the reference's own engine shape. The edge rows are the
-        // probe's collect, already bounded by smallGraphMax + 1.
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        probe.foreach { row =>
-          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        // every non-root member holds a parent entry; roots self-map
-        val rows = parent.keys.toSeq.map(n => (n, find(n)))
-          .filter { case (n, c) => n != c }
+        // the reference's own engine shape over the probe's rows,
+        // already bounded by smallGraphMax + 1
         import spark.implicits._
-        rows.toDF("node", "c")
+        unionFind(probe.iterator.map(r => (r.getLong(0), r.getLong(1)))).toDF("node", "c")
       } else {
         var prevSig = signature(cur)
         var converged = false
@@ -288,6 +277,28 @@ object Identity {
 
   def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame =
     connectedComponentsWithStats(edges, maxIter)._1
+
+  /** In-driver min-union-find over long edges (self-loops allowed):
+    * every NON-root endpoint with the min node of its component. Roots
+    * and isolated nodes are absent — they map to themselves. Shared by
+    * CC's small-graph path and
+    * [[graft.streaming.IdentityStream]]'s driver fold.
+    */
+  private[graft] def unionFind(edges: Iterator[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.toSeq.map(n => (n, find(n)))
+  }
 
   /** Incremental identity resolution — the reference's applyRule/
     * addRules contract (identity.go:79-262): fold a batch of new merge

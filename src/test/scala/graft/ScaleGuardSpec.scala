@@ -38,15 +38,22 @@ class ScaleGuardSpec extends SparkSpec {
     * queries write real artifacts at construction), and four
     * independent sweeps re-paid that ~333-query cost each — ~4 minutes
     * of the suite's budget for identical DataFrames. The suite runs
-    * single-threaded, so a plain map suffices; plan-mode confs (the
-    * AQE toggle below) apply at plan ACCESS, not construction, so the
-    * shared QueryExecution still yields the static plan inside the
-    * AQE-off sweep, which evaluates executedPlan first.
+    * single-threaded, so a plain map suffices. A QueryExecution
+    * memoizes its physical plan under whatever confs held when it was
+    * first forced, so the AQE-off sweep never reads the shared one: it
+    * plans a fresh QueryExecution over each shared analyzed plan
+    * ([[staticPlan]]), whatever order the tests run in.
     */
   private val builtCache =
     scala.collection.mutable.Map.empty[(String, String), org.apache.spark.sql.DataFrame]
   private def built(name: String, dir: String): org.apache.spark.sql.DataFrame =
     builtCache.getOrElseUpdate((name, dir), SparkEntry.queries(name)(spark, dir))
+
+  /** The query's physical plan as planned NOW, from a fresh
+    * QueryExecution (no eager construction work is repeated). */
+  private def staticPlan(name: String, dir: String): SparkPlan =
+    GraftPlanProbe.ofRows(spark, built(name, dir).queryExecution.analyzed)
+      .queryExecution.executedPlan
 
   /** query -> why its single-partition window/sort is safe at scale */
   private val singlePartitionPinned: Map[String, String] = Map(
@@ -218,7 +225,9 @@ class ScaleGuardSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val found = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-        val plan = built(name, sfDir).queryExecution.executedPlan
+        val plan = staticPlan(name, sfDir)
+        assert(!plan.isInstanceOf[adaptive.AdaptiveSparkPlanExec],
+          s"$name was planned with AQE on")
         violations(name, plan)
       }
       assert(found.isEmpty, "scale-killer plans found:\n" + found.mkString("\n"))

@@ -2249,6 +2249,118 @@ class StreamingSpec extends SparkSpec with ReleaseFixtures {
     assert(ledger === Set(1L -> 2L, 50L -> 51L, 4L -> 51L))
   }
 
+  test("identity driver fold equals the DataFrame chain on a seeded random " +
+    "sequence: duplicates, self-loops, aliases, retro merges, replay, " +
+    "compaction, unmerge and relink") {
+    val sess = spark
+    import sess.implicits._
+    val rnd = new scala.util.Random(8101)
+    def user() = 1L + rnd.nextInt(30)
+    def anon() = 1000L + rnd.nextInt(60)
+    def randomBatch(n: Int): Seq[(Long, Long)] = {
+      val es = Seq.fill(n)(rnd.nextInt(10) match {
+        case 0 => val u = user(); (u, u) // self-loop
+        case 1 => (user(), user())       // user<->user alias
+        case _ => (anon(), user())
+      })
+      // a self-loop-only node, and duplicates of a fifth of the batch
+      val lone = 5000L + rnd.nextInt(1000)
+      es ++ es.take(n / 5) :+ (lone -> lone)
+    }
+    // the same state folded twice: default bound (driver) and bound 0
+    // (the DataFrame chain)
+    val root = Files.createTempDirectory("id_equiv").toString
+    val (drv, fbk) = (s"$root/driver", s"$root/fallback")
+    def rows(dir: String, store: String, n: Long) =
+      spark.read.parquet(s"$dir/$store/batch_id=$n").collect().map(_.toSeq.mkString(","))
+        .toSeq.sorted
+    def mappings(dir: String) = IdentityStream.readMappings(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def same(what: String): Unit =
+      assert(mappings(drv) === mappings(fbk), s"readMappings diverged after $what")
+    var ledger = Seq.empty[(Long, Long)]
+    def merge(n: Long, batch: Seq[(Long, Long)]): Unit = {
+      IdentityStream.processBatch(spark, batch.toDF("src", "dst"), drv, n)
+      IdentityStream.processBatch(spark, batch.toDF("src", "dst"), fbk, n, smallGraphMax = 0L)
+      assert(rows(drv, "maps", n) === rows(fbk, "maps", n), s"maps/batch_id=$n diverged")
+      assert(rows(drv, "edges", n) === rows(fbk, "edges", n), s"edges/batch_id=$n diverged")
+      same(s"batch $n")
+    }
+    // an independent oracle: BFS from each component's min node
+    def oracle(edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
+      val adj = (edges ++ edges.map(_.swap)).groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      val label = scala.collection.mutable.Map.empty[Long, Long]
+      adj.keys.toSeq.sorted.foreach { s =>
+        if (!label.contains(s)) {
+          val q = scala.collection.mutable.Queue(s)
+          label(s) = s
+          while (q.nonEmpty) adj(q.dequeue()).foreach { m =>
+            if (!label.contains(m)) { label(m) = s; q += m }
+          }
+        }
+      }
+      label.toSet
+    }
+    val batches = Seq(randomBatch(14), randomBatch(14), randomBatch(10))
+    batches.zipWithIndex.foreach { case (b, i) => merge(i.toLong, b); ledger ++= b }
+    assert(mappings(drv) === oracle(ledger))
+    // replay, compaction with the in-flight batch excluded, replay again
+    merge(2L, batches(2))
+    Seq(drv, fbk).foreach(IdentityStream.compactState(spark, _, targetFiles = 1,
+      excludeBatchId = 2L))
+    same("compaction excluding batch 2")
+    merge(2L, batches(2))
+    val b3 = randomBatch(10)
+    merge(3L, b3)
+    ledger ++= b3
+    assert(mappings(drv) === oracle(ledger))
+    // unmerge the busiest user (the likeliest glue), then relink: a rule
+    // naming it is suppressed, its former neighbours re-enter
+    val glue = ledger.flatMap(e => Seq(e._1, e._2)).filter(_ < 1000L)
+      .groupBy(identity).maxBy { case (n, occ) => (occ.size, -n) }._1
+    val neighbours = ledger.collect { case (a, b) if a == glue && b != glue => b
+      case (a, b) if b == glue && a != glue => a }.distinct.sorted
+    Seq(drv, fbk).foreach(IdentityStream.processUnmerge(spark,
+      Seq(Tuple1(glue)).toDF("node"), _, 4L))
+    assert(rows(drv, "maps", 4L) === rows(fbk, "maps", 4L))
+    same("the unmerge")
+    assert(!mappings(drv).exists(_._1 == glue))
+    merge(5L, Seq(glue -> neighbours.head, neighbours.head -> 7000L,
+      neighbours.last -> 7001L) ++ randomBatch(6))
+    assert(!mappings(drv).exists(_._1 == glue), "rules naming an erased node are suppressed")
+    Seq(drv, fbk).foreach(IdentityStream.compactState(spark, _, targetFiles = 1))
+    same("full compaction")
+    merge(6L, randomBatch(10))
+  }
+
+  test("a warm identity fold of a small batch starts at most 10 Spark jobs") {
+    val sess = spark
+    import sess.implicits._
+    val state = Files.createTempDirectory("id_jobs").toString + "/state"
+    IdentityStream.processBatch(spark, Seq(1L -> 2L, 3L -> 4L).toDF("src", "dst"), state, 0L)
+    IdentityStream.processBatch(spark, Seq(2L -> 3L, 5L -> 6L).toDF("src", "dst"), state, 1L)
+    val group = "identity-fold-job-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val batch = Seq(4L -> 5L, 6L -> 7L, 8L -> 8L).toDF("src", "dst")
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "one warm identity fold")
+    try IdentityStream.processBatch(spark, batch, state, 2L)
+    finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftPlanProbe.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() > 0 && jobs.get() <= 10, s"a warm identity fold started ${jobs.get()} jobs")
+    assert(IdentityStream.readMappings(spark, state).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 1L, 7L -> 1L, 8L -> 8L))
+  }
+
   test("single-partition fold crash window: a sentinel [a,a] covers per-batch a " +
     "(equal range), so readers never double-count and reclaim succeeds") {
     val sess = spark

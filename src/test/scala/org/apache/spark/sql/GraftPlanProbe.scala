@@ -12,6 +12,11 @@ object GraftPlanProbe {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until every event posted so far reached the listeners, so a
+    * test's SparkListener counts are complete when it reads them. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Build a sibling session on the SAME SparkContext with the given
     * extensions applied — what `spark.sql.extensions` (a STATIC conf,
     * unreachable once a shared test JVM holds a context) would do at
